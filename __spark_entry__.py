@@ -9,7 +9,6 @@ noise cannot flip the value hash.
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 import numpy as np
@@ -19,6 +18,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_framework_spark import apply_ops
 from data_pipeline_framework_spark.operators import window_ops as W
+from data_pipeline_framework_spark.session import pin_runtime_conf
 from data_pipeline_framework_spark.sources import read_table
 
 TABLES = (
@@ -27,53 +27,17 @@ TABLES = (
 )
 
 
-# Runtime-settable confs every query needs regardless of who built the
-# SparkSession. The driver's correctness harness passes a VANILLA session
-# (round-1 lesson: it lacked nanosAsLong and 12 events queries died at scan
-# time), so each registered callable pins these itself instead of assuming
-# `get_spark()` defaults. All four are documented runtime-settable SQL confs.
-_SESSION_PINS = {
-    # TIMESTAMP(NANOS) parquet -> long (readers.read_parquet converts).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Spark 4 defaults ANSI on; the engine's DSL has permissive-cast
-    # semantics (dirty-string casts -> NULL, not error) matching DuckDB's
-    # TRY_CAST-style oracles where used.
-    "spark.sql.ansi.enabled": "false",
-    # DuckDB is UTC-naive; pin Spark's session zone so hour()/date_trunc()
-    # agree even if the host JVM zone ever differs.
-    "spark.sql.session.timeZone": "UTC",
-    # Arrow for toPandas()/pandas-UDF exchange (perf only, not semantics).
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # A vanilla session defaults to 200 shuffle partitions; AQE coalesces
-    # most of that away but NOT under cached plans (persisted intermediates
-    # keep their partitioning), so correctness-gate runs at tiny SF pay
-    # 200 tasks per cached shuffle. 32 matches the harness core budget;
-    # perf-only, results identical. Cluster callers never go through these
-    # pins (they're applied by the driver-facing query wrappers only).
-    "spark.sql.shuffle.partitions": "32",
-}
-
-
-# Sessions already pinned: _prep runs once per query AND once per table
-# read, each pin a py4j round trip — ~10-60 redundant round trips per
-# query for confs that were set on the first call and never change
-# (guide §4: driver boundary). Weak so a stopped session releases its
-# entry; a NEW session object always gets pinned.
-_PINNED_SESSIONS = weakref.WeakSet()
-
-
+# Every registered callable re-applies the engine's runtime confs itself
+# instead of assuming `get_spark()` built the session: an external
+# correctness harness may pass a VANILLA session (one that lacked
+# nanosAsLong once made 12 events queries die at scan time).
 def _prep(spark: SparkSession) -> SparkSession:
-    if spark in _PINNED_SESSIONS:
-        return spark
-    for k, v in _SESSION_PINS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # never let a conf refusal mask the query itself
-    try:
-        _PINNED_SESSIONS.add(spark)
-    except TypeError:
-        pass
+    pin_runtime_conf(spark)
+    # Harness choice, not an engine default: a vanilla session has 200
+    # shuffle partitions, which AQE does not coalesce under cached plans,
+    # so tiny-SF gate runs would pay 200 tasks per cached shuffle. 32
+    # matches the harness core budget; results are identical.
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     return spark
 
 
@@ -88,7 +52,7 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(_prep(spark), sf_dir, name)
+    return read_table(spark, sf_dir, name)
 
 
 def _r(col, k: int = 4):

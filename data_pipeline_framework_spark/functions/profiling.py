@@ -690,6 +690,14 @@ def average_ranks(
         pass
 
 
+def _stat(c: str, metric: str) -> str:
+    """profile_columns' name for one column's statistic. The reserved
+    prefix keeps it apart from the frame's own columns (a `price__min`
+    beside `price` would otherwise be an ambiguous reference once the
+    stats frame is cross-joined back onto the data)."""
+    return f"__profile__{c}__{metric}"
+
+
 def profile_columns(
     df: DataFrame, columns: list[str] | None = None, exact: bool = False
 ) -> DataFrame:
@@ -756,24 +764,24 @@ def profile_columns(
             ).otherwise(0)
         )
         aggs += [
-            sum_dec.cast("double").alias(f"{c}__sum"),
+            sum_dec.cast("double").alias(_stat(c, "sum")),
             (
                 sum_dec.cast("double")
                 / F.count(col).cast("double")
-            ).alias(f"{c}__mean"),
-            F.sum(v).alias(f"{c}__dsum"),
-            lossy.alias(f"{c}__n_lossy"),
-            F.stddev(col).cast("double").alias(f"{c}__stddev"),
-            F.sum(F.when(col == 0, 1).otherwise(0)).alias(f"{c}__n_zero"),
-            F.sum(F.when(col < 0, 1).otherwise(0)).alias(f"{c}__n_negative"),
-            F.count(v).alias(f"{c}__n"),
-            F.min(v).alias(f"{c}__min"),
-            F.max(v).alias(f"{c}__max"),
+            ).alias(_stat(c, "mean")),
+            F.sum(v).alias(_stat(c, "dsum")),
+            lossy.alias(_stat(c, "n_lossy")),
+            F.stddev(col).cast("double").alias(_stat(c, "stddev")),
+            F.sum(F.when(col == 0, 1).otherwise(0)).alias(_stat(c, "n_zero")),
+            F.sum(F.when(col < 0, 1).otherwise(0)).alias(_stat(c, "n_negative")),
+            F.count(v).alias(_stat(c, "n")),
+            F.min(v).alias(_stat(c, "min")),
+            F.max(v).alias(_stat(c, "max")),
         ]
     if not exact:
         for c in cols:
             aggs.append(
-                F.approx_count_distinct(F.col(c), 0.01).alias(f"{c}__nd")
+                F.approx_count_distinct(F.col(c), 0.01).alias(_stat(c, "nd"))
             )
     # Exact distinct counts run in a DEDICATED agg (fusing several
     # count_distinct columns into the stats agg would Expand-replicate
@@ -820,8 +828,8 @@ def profile_columns(
         structs: list[Column] = []
         for i, c in enumerate(cols):
             v = F.col(c).cast("double")
-            mn_c = F.col(f"{c}__min")
-            mx_c = F.col(f"{c}__max")
+            mn_c = F.col(_stat(c, "min"))
+            mx_c = F.col(_stat(c, "max"))
             width_c = (mx_c - mn_c) / F.lit(float(n_bins))
             b = F.least(
                 F.lit(n_bins - 1),
@@ -866,7 +874,7 @@ def profile_columns(
         row = df.agg(*aggs).first()
         preseed = {}
     meta = {
-        c: (row[f"{c}__n"], row[f"{c}__min"], row[f"{c}__max"])
+        c: (row[_stat(c, "n")], row[_stat(c, "min")], row[_stat(c, "max")])
         for c in cols
     }
     # Quartile extraction: exact histogram bracket + window collect,
@@ -881,7 +889,7 @@ def profile_columns(
             raise nd_box["err"]
         nd_row = nd_box["row"]
     else:
-        nd_row = {c: row[f"{c}__nd"] for c in cols}
+        nd_row = {c: row[_stat(c, "nd")] for c in cols}
     metrics = [
         "count", "n_null", "n_distinct", "min", "max", "sum", "mean",
         "stddev", "q25", "median", "q75", "n_zero", "n_negative",
@@ -889,35 +897,35 @@ def profile_columns(
     ]
     out_rows: list[tuple[str, str, float | None]] = []
     for c in cols:
-        n = row[f"{c}__n"]
+        n = row[_stat(c, "n")]
         q = quart.get(c, [None, None, None])
-        n_lossy = row[f"{c}__n_lossy"]
+        n_lossy = row[_stat(c, "n_lossy")]
         # double-sum fallback: per-value cast loss OR aggregate-level
         # decimal overflow (sum null despite n non-null representable
         # values) — both mean the exact accumulator misses rows the
         # other stats include, so propagate via the double path.
         use_double = (n_lossy or 0) > 0 or (
-            n > 0 and row[f"{c}__sum"] is None
+            n > 0 and row[_stat(c, "sum")] is None
         )
-        c_sum = row[f"{c}__dsum"] if use_double else row[f"{c}__sum"]
+        c_sum = row[_stat(c, "dsum")] if use_double else row[_stat(c, "sum")]
         c_mean = (
             (c_sum / n if (c_sum is not None and n) else None)
             if use_double
-            else row[f"{c}__mean"]
+            else row[_stat(c, "mean")]
         )
         vals = {
             "count": float(n),
             "n_null": float(row["__total"] - n),
             "n_distinct": float(nd_row[c]),
-            "min": row[f"{c}__min"],
-            "max": row[f"{c}__max"],
+            "min": row[_stat(c, "min")],
+            "max": row[_stat(c, "max")],
             "sum": c_sum,
             "mean": c_mean,
             "n_lossy": float(n_lossy or 0),
-            "stddev": row[f"{c}__stddev"],
+            "stddev": row[_stat(c, "stddev")],
             "q25": q[0], "median": q[1], "q75": q[2],
-            "n_zero": float(row[f"{c}__n_zero"]),
-            "n_negative": float(row[f"{c}__n_negative"]),
+            "n_zero": float(row[_stat(c, "n_zero")]),
+            "n_negative": float(row[_stat(c, "n_negative")]),
         }
         for m in metrics:
             v = vals[m]

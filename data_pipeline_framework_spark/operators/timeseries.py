@@ -253,28 +253,6 @@ def fill_missing(
     raise ValueError(f"unsupported fill method: {method!r}")
 
 
-def time_spine(
-    df: DataFrame,
-    ts_col: str,
-    step: str,
-    group_by: list[str] | None = None,
-) -> DataFrame:
-    """Dense (key, bucket) spine from each key's min..max timestamp —
-    F.sequence + explode, generated executor-side (the gap-filling
-    prerequisite for resample with fill; reference time_series.py:45-60).
-    """
-    keys = list(group_by or [])
-    bounds = df.groupBy(*keys).agg(
-        F.min(ts_col).alias("__lo"), F.max(ts_col).alias("__hi")
-    )
-    return bounds.select(
-        *keys,
-        F.explode(
-            F.sequence("__lo", "__hi", F.expr(f"INTERVAL {step}"))
-        ).alias(ts_col),
-    )
-
-
 def _apply_per_series(df: DataFrame, fn, schema, keys: list[str]) -> DataFrame:
     """applyInPandas per series; with no keys, group on a temp constant
     column (grouping directly on a literal trips Spark's GROUP BY ordinal

@@ -4,6 +4,15 @@ Defaults chosen for the 100 TB design point (AQE on so shuffle partition
 counts and join strategies re-plan at runtime; skew-join handling on;
 Arrow for any pandas-UDF exchange) while remaining correct on local[*].
 
+This module is the one owner of the engine's confs. `RUNTIME_CONF` holds
+the runtime-settable ones that query results depend on; `get_spark` passes
+them to the builder with the rest, and `pin_runtime_conf` re-applies them
+to a session built elsewhere (an external harness's vanilla session).
+
+Heap: on local masters the driver JVM runs every executor thread, so
+`spark.driver.memory` defaults to half the host's physical memory, in MiB,
+capped at 24g (`local_driver_memory`). `extra_conf` overrides it.
+
 Reference parity: the reference sets AQE/Arrow/coalescePartitions in its
 YAML spark_config (reference config/pipelines/s3_json_pipeline.yaml and the
 generated template in cli/main.py:908-911); here they are engine defaults.
@@ -15,31 +24,40 @@ import os
 
 from pyspark.sql import SparkSession
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Runtime-settable confs query results depend on. A session someone else
+# built may lack them, so callers that accept any session re-apply them
+# (`pin_runtime_conf`; sources.readers for NANOS_AS_LONG).
+RUNTIME_CONF: dict[str, str] = {
+    # ANSI off: the reference's DSL has permissive casts (e.g. fill/convert
+    # on dirty strings); try_* functions are used where div-by-zero etc.
+    # must be NULL.
+    "spark.sql.ansi.enabled": "false",
+    # Deterministic timestamp semantics for oracle comparison (DuckDB is
+    # UTC-naive).
+    "spark.sql.session.timeZone": "UTC",
+    # Read TIMESTAMP(NANOS) parquet columns as nanosecond longs instead of
+    # erroring; sources.readers.read_parquet converts them to timestamps.
+    NANOS_AS_LONG: "true",
+    # Arrow makes pandas_udf / applyInPandas exchange columnar batches.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 # Engine defaults. Every one of these is overridable via `extra_conf`.
 _DEFAULT_CONF: dict[str, str] = {
+    **RUNTIME_CONF,
     # Adaptive execution: runtime re-plan of shuffle partition counts,
     # broadcast-join demotion/promotion, and skew-join splitting. At 100 TB
     # this is what keeps a static shuffle.partitions guess from being fatal.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow makes pandas_udf / applyInPandas exchange columnar batches.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Deterministic timestamp semantics for oracle comparison (DuckDB is
-    # UTC-naive).
-    "spark.sql.session.timeZone": "UTC",
-    # ANSI off: the reference's DSL has permissive casts (e.g. fill/convert
-    # on dirty strings); try_* functions are used where div-by-zero etc.
-    # must be NULL.
-    "spark.sql.ansi.enabled": "false",
     # Parquet scans: 128m is the classic cluster default; local masters
     # override this below so a single small file still fans out across
     # cores (a 20 MB sf0.1 table would otherwise run every scan, and every
     # CPU-bound expression over it, in ONE task).
     "spark.sql.files.maxPartitionBytes": "134217728",
-    # Read TIMESTAMP(NANOS) parquet columns as nanosecond longs instead of
-    # erroring; sources.readers.read_parquet converts them to timestamps.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # PySpark-side call-site capture costs ~8 py4j round trips PER
     # DataFrame/Column/functions call (getActiveSession + conf.get +
     # PySparkCurrentOrigin.set/clear and their reflection lookups) plus a
@@ -66,6 +84,22 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def local_driver_memory() -> str:
+    """Driver heap for a local master: half of physical memory, in MiB,
+    capped at 24g. Leaves the other half to the JVM's off-heap memory,
+    the Python workers and the OS page cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2 // 2**20, 24 * 1024)}m"
+
+
+def pin_runtime_conf(spark: SparkSession) -> None:
+    """Set `RUNTIME_CONF` on an existing session, e.g. one built without
+    `get_spark`. Applied on every call: a caller may have changed a conf
+    since the last one, and each set is one cheap py4j round trip."""
+    for k, v in RUNTIME_CONF.items():
+        spark.conf.set(k, v)
+
+
 def get_spark(
     app_name: str = "data-pipeline-framework-spark",
     master: str | None = None,
@@ -89,10 +123,8 @@ def get_spark(
     if master.startswith("local"):
         # local[N] packs driver + N executor threads into ONE JVM; the 1g
         # default heap GC-thrashes once a few persisted intermediates
-        # accumulate. 32 threads × wide codegen stages want real headroom,
-        # so take a generous slice of the machine (128 GiB here). Only
-        # effective before the JVM starts (fresh process).
-        conf.setdefault("spark.driver.memory", "24g")
+        # accumulate. Only effective before the JVM starts (fresh process).
+        conf["spark.driver.memory"] = local_driver_memory()
         # small-input parallelism: split files at 4 MB (and open cheaply)
         # so local benchmarking exercises the same parallel plans a
         # cluster would; harmless for large inputs (more, smaller tasks —
@@ -117,18 +149,4 @@ def get_spark(
 
     install_jvm_function_cache()
 
-    spark = builder.getOrCreate()
-    if spark.conf.get(
-        "spark.python.sql.dataFrameDebugging.enabled", "true"
-    ) != conf["spark.python.sql.dataFrameDebugging.enabled"]:
-        # getOrCreate() may have returned a pre-existing session the
-        # builder conf couldn't reach; the flag is read (and cached) by
-        # pyspark at the first wrapped API call, so set it directly too.
-        try:
-            spark.conf.set(
-                "spark.python.sql.dataFrameDebugging.enabled",
-                conf["spark.python.sql.dataFrameDebugging.enabled"],
-            )
-        except Exception:
-            pass
-    return spark
+    return builder.getOrCreate()

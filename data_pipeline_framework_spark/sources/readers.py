@@ -13,15 +13,11 @@ replaces the reference's boto3 list+fnmatch loop (s3_source.py:218-242).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Sessions whose nanosAsLong conf has been pinned already (weak: a
-# stopped session releases its entry; a new session re-pins).
-_NANOS_PINNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+from ..session import NANOS_AS_LONG, RUNTIME_CONF
 
 
 def _with_source_file(df: DataFrame, add: bool, colname: str = "_source_file") -> DataFrame:
@@ -85,14 +81,20 @@ def read_parquet(
     settable, so it is applied here rather than assumed on the session —
     callers with a vanilla SparkSession (e.g. an external harness) read
     NANOS files without special setup."""
-    if spark not in _NANOS_PINNED:
-        # once per session: each conf.set is a py4j round trip and this
-        # runs on every table read of every query (guide §4)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            _NANOS_PINNED.add(spark)
-        except TypeError:
-            pass
+    spark.conf.set(NANOS_AS_LONG, RUNTIME_CONF[NANOS_AS_LONG])
+    return _scan_parquet(
+        spark, path, nanos_ts_columns, source_file_column, schema, options
+    )
+
+
+def _scan_parquet(
+    spark: SparkSession,
+    path: str | list[str],
+    nanos_ts_columns: tuple[str, ...],
+    source_file_column: bool,
+    schema: T.StructType | None,
+    options: dict,
+) -> DataFrame:
     reader = spark.read
     if options:
         reader = reader.options(**options)
@@ -158,18 +160,19 @@ def _memoized_schema(
     key = (path, st.st_mtime_ns, st.st_size)
     sch = _TABLE_SCHEMA_MEMO.get(key)
     if sch is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         sch = spark.read.parquet(path).schema
         _TABLE_SCHEMA_MEMO[key] = sch
     return sch
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the benchmark tables, normalizing nanos timestamps."""
+    """Load one of the benchmark tables, normalizing nanos timestamps.
+    Like read_parquet, it sets NANOS_AS_LONG first, here before the
+    schema memo's inference on a miss."""
     path = f"{sf_dir}/{name}.parquet"
-    return read_parquet(
-        spark, path, nanos_ts_columns=("ts",),
-        schema=_memoized_schema(spark, path),
+    spark.conf.set(NANOS_AS_LONG, RUNTIME_CONF[NANOS_AS_LONG])
+    return _scan_parquet(
+        spark, path, ("ts",), False, _memoized_schema(spark, path), {}
     )
 
 

@@ -191,3 +191,27 @@ def test_profile_lossy_values_propagate(spark):
     }
     assert gc["n_lossy"] == 0.0
     assert gc["sum"] == pytest.approx(0.3, abs=1e-12)  # exact decimal add
+
+
+def test_profile_columns_beside_stat_named_column(spark):
+    # A frame whose own column looks like one of the profile's stats
+    # (`price__min` next to `price`) must profile both columns: the stats
+    # frame is cross-joined back onto the data, so a shared name would be
+    # an ambiguous reference.
+    from data_pipeline_framework_spark.functions.profiling import (
+        profile_columns,
+    )
+
+    df = spark.createDataFrame(
+        [(1.0, 10.0), (2.0, 20.0), (4.0, 30.0)], "price double, price__min double"
+    )
+    got = {
+        (r["column"], r["metric"]): r["value"]
+        for r in profile_columns(df).collect()
+    }
+    assert got[("price", "min")] == 1.0
+    assert got[("price", "max")] == 4.0
+    assert got[("price", "median")] == 2.0
+    assert got[("price__min", "min")] == 10.0
+    assert got[("price__min", "max")] == 30.0
+    assert got[("price__min", "sum")] == 60.0

@@ -227,13 +227,16 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from data_pipeline_framework_spark.session import local_driver_memory
+
     # Deliberately VANILLA session — replicates the driver's correctness
     # harness (which does NOT use get_spark()), so any session-default
-    # assumption in a query fails here first. Only the master is set.
+    # assumption in a query fails here first. Only the master and the
+    # host-sized heap are set.
     spark = (
         SparkSession.builder.appName("check")
         .master("local[8]")
-        .config("spark.driver.memory", "12g")
+        .config("spark.driver.memory", local_driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
