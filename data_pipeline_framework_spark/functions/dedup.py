@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..performance.cache import release
 from .text import _spread, hash52, tokens  # noqa: F401  (_spread re-exported; long-standing import site for callers)
 
 # (a, b) pairs for k=16 minhash permutations; a < 2^10 keeps a*hash52 < 2^62
@@ -566,7 +567,7 @@ def connected_components(
             labels = _driver_union_find(
                 ((r["u"], r["v"]) for r in rows), e.sparkSession
             )
-            e.unpersist()
+            release(e)
             return labels
         # localCheckpoint truncates the lineage each round — without it the
         # logical plan doubles per iteration and Catalyst re-optimization
@@ -575,13 +576,14 @@ def connected_components(
         # storage for fault tolerance instead)
         nxt = small_star(large_star(e)).localCheckpoint(eager=True)
         cur_sum = _checksum(nxt)
-        e.unpersist()
+        release(e)
         e = nxt
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
     # fixpoint edges are stars (node -> component root); roots label
-    # themselves
+    # themselves. The returned lazy frame reads the last round, so that
+    # checkpoint stays; earlier rounds were released above.
     labels = e.select("u", "v").union(
         e.select(F.col("v").alias("u"), F.col("v").alias("v"))
     )
@@ -890,10 +892,15 @@ def source_overlap_matrix(
     # group_col (URL domains, user ids) from OOMing the driver. If
     # every row comes back under the cap the probe IS the full set and
     # the driver assembly proceeds exactly as before; otherwise fall
-    # back to the fully distributed join form (r10 guard).
+    # back to the fully distributed join form (r10 guard). Persisted
+    # BEFORE the probe so the fallback reads what the probe computed
+    # (the partitions it cached, the shuffle output for the rest)
+    # instead of running the aggregation a second time.
     cap = _OVERLAP_COLLECT_CAP
+    counted_df = counted_df.persist()
     probe = counted_df.limit(cap + 1).collect()
     if len(probe) <= cap:
+        counted_df.unpersist()
         sizes = {
             r["source_a"]: r["__c"] for r in probe if r["source_b"] is None
         }
@@ -912,9 +919,10 @@ def source_overlap_matrix(
         return df.sparkSession.createDataFrame(rows, out_schema)
     # distributed assembly: split the one aggregation's output into the
     # size rows and the pair rows, join sizes on per-side keys, and run
-    # the IDENTICAL IEEE division in-plan. persist: the probe already
-    # computed the aggregation once; three more consumers read it here.
-    counted_df = counted_df.persist()
+    # the IDENTICAL IEEE division in-plan. counted_df stays persisted:
+    # the returned lazy frame reads it three times. Released by the
+    # caller's/session's cache clear — the same lazy-return contract
+    # as collocation_pmi and the other persisting kernels.
     sizes_df = counted_df.filter(F.col("source_b").isNull()).select(
         F.col("source_a").alias("__s"), F.col("__c").alias("__n")
     )

@@ -61,6 +61,8 @@ from importlib import resources as _importlib_resources
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..performance.cache import release
+
 __all__ = [
     "BPETokenizer",
     "PandasTokenizer",
@@ -776,9 +778,9 @@ def train_bpe_merges_distributed(
             ).alias("__s"),
             "__c",
         ).localCheckpoint(eager=True)
-        state.unpersist()
+        release(state)
         state = nxt
-    state.unpersist()
+    release(state)
     return merges
 
 

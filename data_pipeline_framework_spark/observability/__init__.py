@@ -6,6 +6,7 @@ from .metrics import (  # noqa: F401
     HealthChecker,
     Metric,
     MetricsCollector,
+    QueryRecord,
     SparkQueryMonitor,
     ThresholdRule,
     executor_count_check,

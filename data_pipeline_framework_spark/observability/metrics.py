@@ -6,11 +6,11 @@ counter/gauge/histogram + timer, windowed aggregation, JSON/Prometheus
 export, AlertManager with ThresholdRule, HealthChecker) but replaces
 its psutil system monitor with the thing that actually matters on a
 cluster: PER-QUERY Spark executor metrics. ``SparkQueryMonitor``
-scopes an action under a job group and pulls the stages' shuffle
+scopes an action under a job group and reads the stages' shuffle
 read/write bytes, input bytes, spill, task counts, and executor run
-time from Spark's status REST API — the numbers that tell you a query
-started shuffling 100x more than yesterday, which no driver-side
-psutil gauge can see.
+time from the driver's in-process status store — the numbers that
+tell you a query started shuffling 100x more than yesterday, which no
+driver-side psutil gauge can see.
 
 Everything here is driver-side bookkeeping (bounded dict state, no
 Spark jobs of its own); the collector can be drained into any external
@@ -24,6 +24,7 @@ import threading
 import time
 import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from enum import Enum
 
@@ -327,7 +328,7 @@ def executor_count_check(spark, min_executors: int = 1) -> Callable[[], bool]:
     return check
 
 
-# stage metrics surfaced per measured query: REST field -> metric suffix
+# stage metrics surfaced per measured query: status-store field -> suffix
 _STAGE_FIELDS = {
     "inputBytes": "input_bytes",
     "outputBytes": "output_bytes",
@@ -339,6 +340,24 @@ _STAGE_FIELDS = {
     "numTasks": "num_tasks",
 }
 
+# the local properties setJobGroup writes; a measure scope puts them back
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+
+
+@dataclass
+class QueryRecord:
+    """What one ``measure`` scope ran: wall seconds, its Spark jobs as
+    (job id, submitted, completed) in epoch seconds, and ``totals`` —
+    each ``_STAGE_FIELDS`` suffix summed over the stages those jobs
+    ran, plus ``num_stages``. Skipped stages (shuffle output reused)
+    did no work and are left out."""
+
+    name: str
+    wall_s: float = 0.0
+    jobs: list[tuple[int, float, float | None]] = field(default_factory=list)
+    totals: dict[str, int] = field(default_factory=dict)
+
 
 class SparkQueryMonitor:
     """Per-query Spark execution metrics, the cluster-native replacement
@@ -346,128 +365,85 @@ class SparkQueryMonitor:
     (observability/metrics.py:419-491 — CPU/memory gauges of one box
     tell you nothing about a 1000-executor shuffle).
 
-    ``with monitor.measure("daily_dedup"): df.write...`` runs the
-    action under a unique job group, then reads that group's stages
-    from Spark's status REST API and records, per query name:
-    wall seconds, input/output bytes, shuffle read/write bytes,
-    memory/disk spill, executor run time, task count. Repeated
-    measurements build the time series ThresholdRule alerts on —
-    "shuffle_write_bytes latest > 10x its 24h avg" is the drift that
-    matters at 100 TB.
+    ``with monitor.measure("daily_dedup") as rec: df.write...`` runs
+    the block under a unique job group, then reads that group's jobs
+    and stages from the driver's in-process status store and fills
+    ``rec`` (a ``QueryRecord``). With a collector it also records, per
+    query name: wall seconds, input/output bytes, shuffle read/write
+    bytes, memory/disk spill, executor run time, task, job and stage
+    counts. Repeated measurements build the time series ThresholdRule
+    alerts on — "shuffle_write_bytes latest > 10x its 24h avg" is the
+    drift that matters at 100 TB.
 
-    The REST read is one localhost HTTP GET of driver-held state (no
-    Spark jobs, no executor traffic). If the UI is disabled
-    (spark.ui.enabled=false) only wall seconds and job/stage counts
-    from the in-process status tracker are recorded — degraded, never
-    failing.
+    The read is a few py4j calls per stage against driver-held state:
+    no Spark jobs, no executor traffic, and no Spark UI needed. The
+    caller's own job group is restored when the scope ends.
     """
 
-    def __init__(self, spark, collector: MetricsCollector):
+    def __init__(self, spark, collector: MetricsCollector | None = None):
         self._spark = spark
         self._collector = collector
 
+    @contextmanager
     def measure(self, name: str, tags: dict | None = None):
-        return _Measurement(self, name, tags or {})
-
-    # -- internals ---------------------------------------------------
-
-    def _rest_json(self, path: str):
-        import urllib.error
-        import urllib.request
-
-        base = self._spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        app = self._spark.sparkContext.applicationId
-        url = f"{base}/api/v1/applications/{app}{path}"
-        # connection-level failures (reset when the session shuts down
-        # mid-poll, refused when the UI port closed, timeouts) degrade
-        # to None exactly like a disabled UI — a monitor poll must
-        # never let an OSError escape into whatever thread runs it.
-        # One quick retry covers the transient-reset case.
-        for attempt in (0, 1):
-            try:
-                with urllib.request.urlopen(url, timeout=10) as resp:
-                    return json.load(resp)
-            except (urllib.error.URLError, OSError, ValueError):
-                if attempt == 0:
-                    time.sleep(0.2)
-        return None
-
-    def _stage_metrics_for_group(self, group: str) -> dict | None:
+        sc = self._spark.sparkContext
+        outer = [(k, sc.getLocalProperty(k)) for k in _GROUP_PROPS]
+        group = f"obs_{name}_{uuid.uuid4().hex[:8]}"
+        rec = QueryRecord(name)
+        sc.setJobGroup(group, f"observed query {name}")
+        t0 = time.perf_counter()
         try:
-            jobs = self._rest_json("/jobs")
-            if jobs is None:  # UI off or poll failed: skip, don't zero
-                return None
-            stage_ids = {
-                sid for j in jobs if j.get("jobGroup") == group
-                for sid in j.get("stageIds", [])
-            }
-            if not stage_ids:
-                return {f: 0 for f in _STAGE_FIELDS} | {
-                    "num_jobs": 0, "num_stages": 0}
-            stages = self._rest_json("/stages") or []
-            totals = dict.fromkeys(_STAGE_FIELDS, 0)
-            seen = set()
-            for st in stages:
-                sid = st.get("stageId")
-                if sid in stage_ids:
-                    seen.add(sid)
-                    for f in _STAGE_FIELDS:
-                        totals[f] += int(st.get(f) or 0)
-            totals["num_jobs"] = sum(
-                1 for j in jobs if j.get("jobGroup") == group
-            )
-            totals["num_stages"] = len(seen)
-            return totals
-        except Exception:
-            return None  # UI off / port closed: degrade, don't fail
-
-    def _record(self, name: str, tags: dict, wall: float,
-                group: str) -> None:
-        c = self._collector
-        c.record_histogram(f"spark_query_{name}_wall_seconds", wall, tags)
-        totals = self._stage_metrics_for_group(group)
-        if totals is None:
-            return
-        for f, suffix in _STAGE_FIELDS.items():
-            c.record_gauge(
-                f"spark_query_{name}_{suffix}", float(totals[f]), tags
-            )
-        c.record_gauge(
-            f"spark_query_{name}_num_jobs", float(totals["num_jobs"]), tags
-        )
-        c.record_gauge(
-            f"spark_query_{name}_num_stages",
-            float(totals["num_stages"]), tags,
-        )
-
-
-class _Measurement:
-    def __init__(self, monitor: SparkQueryMonitor, name: str, tags: dict):
-        self._m = monitor
-        self._name = name
-        self._tags = tags
-        self._group = f"obs_{name}_{uuid.uuid4().hex[:8]}"
-        self._t0 = 0.0
-
-    def __enter__(self):
-        sc = self._m._spark.sparkContext
-        sc.setJobGroup(self._group, f"observed query {self._name}")
-        self._t0 = time.time()
-        return self
-
-    def __exit__(self, *exc):
-        wall = time.time() - self._t0
-        sc = self._m._spark.sparkContext
-        try:
-            self._m._record(self._name, self._tags, wall, self._group)
+            yield rec
         finally:
+            rec.wall_s = time.perf_counter() - t0
+            for k, v in outer:
+                sc.setLocalProperty(k, v)
+            self._read_group(group, rec)
+            if self._collector is not None:
+                self._record(rec, tags or {})
+
+    def _read_group(self, group: str, rec: QueryRecord) -> None:
+        from py4j.protocol import Py4JJavaError
+
+        sc = self._spark.sparkContext
+        jsc = sc._jsc.sc()
+        # job/stage end events reach the status store through the async
+        # listener bus; drain it so the group's last stage is counted
+        jsc.listenerBus().waitUntilEmpty()
+        store, tracker = jsc.statusStore(), sc.statusTracker()
+        totals = dict.fromkeys(_STAGE_FIELDS.values(), 0)
+        stage_ids: set[int] = set()
+        for jid in sorted(tracker.getJobIdsForGroup(group)):
+            job = store.job(jid)
+            end = job.completionTime()
+            rec.jobs.append((
+                jid,
+                job.submissionTime().get().getTime() / 1000,
+                end.get().getTime() / 1000 if end.isDefined() else None,
+            ))
+            stage_ids.update(tracker.getJobInfo(jid).stageIds)
+        ran = 0
+        for sid in sorted(stage_ids):
             try:
-                sc._jsc.clearJobGroup()
-            except Exception:
-                pass  # group would be overwritten by the next setJobGroup
-        return False
+                st = store.lastStageAttempt(sid)
+            except Py4JJavaError:
+                # gone from the store: past spark.ui.retainedStages the
+                # stages with no completion time, the skipped ones, are
+                # evicted first
+                continue
+            if st.status().toString() == "SKIPPED":
+                continue
+            ran += 1
+            for f, suffix in _STAGE_FIELDS.items():
+                totals[suffix] += int(getattr(st, f)())
+        rec.totals = totals | {"num_stages": ran}
+
+    def _record(self, rec: QueryRecord, tags: dict) -> None:
+        c, prefix = self._collector, f"spark_query_{rec.name}"
+        c.record_histogram(f"{prefix}_wall_seconds", rec.wall_s, tags)
+        for suffix, v in rec.totals.items():
+            c.record_gauge(f"{prefix}_{suffix}", float(v), tags)
+        c.record_gauge(f"{prefix}_num_jobs", float(len(rec.jobs)), tags)
 
 
 # -- process-wide singletons (reference observability/metrics.py:495-528) ----

@@ -34,7 +34,20 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["DataFrameCache", "cache_key", "cached_dataframe"]
+__all__ = ["DataFrameCache", "cache_key", "cached_dataframe", "release"]
+
+
+def release(df: DataFrame) -> None:
+    """Free the executor blocks behind ``df``, whether it was
+    ``persist()``ed or ``localCheckpoint()``ed. ``unpersist()`` is a
+    no-op on a local checkpoint: its rows live in the checkpointed RDD
+    under the frame's LogicalRDD leaf, so that RDD is unpersisted
+    instead. Any frame still reading the checkpoint fails afterwards."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
 
 
 def cache_key(*args, **kwargs) -> str:

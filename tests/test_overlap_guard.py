@@ -2,7 +2,9 @@
 
 The kernel collects a sources^2 + sources bounded frame to the driver;
 these tests pin (a) the high-cardinality fallback producing IDENTICAL
-values through the fully distributed join form, and (b) the group
+values through the fully distributed join form, reading the
+aggregation its probe computed instead of running it again, (b) the
+driver path releasing that aggregation's cache, and (c) the group
 column's native type surviving into the output (an int source id used
 to come back as the string '1')."""
 
@@ -49,13 +51,24 @@ def _plan(df):
     return df._jdf.queryExecution().optimizedPlan()
 
 
+def _cached_rdd_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_fallback_matches_driver_assembly(spark, monkeypatch):
+    before = _cached_rdd_ids(spark)
     driver = _matrix(spark)
+    # rows in hand, cache released (ids: other tests' leftovers may be
+    # cleaned meanwhile)
+    assert _cached_rdd_ids(spark) - before == set()
     # the driver assembly is one leaf relation built from the probe rows
     assert _plan(driver).children().isEmpty()
     driver_rows = driver.collect()
     monkeypatch.setattr(dedup, "_OVERLAP_COLLECT_CAP", 0)
     fallback = _matrix(spark)
+    # the probe already filled the cache the fallback reads: the
+    # aggregation ran once, inside the probe
+    assert len(_cached_rdd_ids(spark) - before) == 1
     # the guarded path returns a LAZY distributed plan joining the
     # persisted aggregation — prove we actually took it
     plan = _plan(fallback)

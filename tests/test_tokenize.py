@@ -159,6 +159,30 @@ def test_distributed_trainer_matches_driver_trainer(spark):
     assert train_bpe_merges_distributed(tiny, "text", n_merges=8) == []
 
 
+def _cached_rdd_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_distributed_trainer_releases_its_rounds(spark):
+    """every round's localCheckpoint is released: unpersist() alone is
+    a no-op on a checkpointed frame and left one RDD per round."""
+    from data_pipeline_framework_spark.functions.tokenize import (
+        train_bpe_merges_distributed,
+    )
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(
+            ["the theory of the thing", "then the sand and the sea"] * 3
+        )],
+        ["id", "text"],
+    )
+    before = _cached_rdd_ids(spark)
+    merges = train_bpe_merges_distributed(df, "text", n_merges=5)
+    assert len(merges) == 5
+    # compared by id: earlier tests' leftovers may be cleaned meanwhile
+    assert _cached_rdd_ids(spark) - before == set()
+
+
 def test_merges_roundtrip(tmp_path):
     p = str(tmp_path / "m.txt")
     save_merges(MERGES, p)

@@ -1,16 +1,22 @@
-"""Optimization-round measurement harness.
+"""Per-query profile: build and action measured apart, best of N.
 
-For each headline query (or an explicit list): capture the physical plan
-(``.explain("formatted")``) into plans/<tag>/<name>_<suffix>.txt and time
-the query with the SAME forcing action bench.py uses (noop sink for wide
-outputs, collect for bounded ones), min-of-N.
+Each query is built and then forced with the SAME action bench.py uses
+(noop sink for wide outputs, collect for bounded ones), each step under
+its own ``SparkQueryMonitor.measure`` scope. Spark jobs a kernel fires
+while its DataFrame is still being built show up as build jobs; the
+action's jobs carry the executor side: stages, shuffle read/write,
+spill, executor run time and tasks. The run with the lowest build +
+action wall time is reported.
 
 Usage:
-    python tools/profile_queries.py [--plans-only] [--runs N]
-        [--tag r09] [--suffix before] [--out FILE] [query ...]
+    python tools/profile_queries.py [--runs N] [--plans DIR] [--out FILE]
+        [query ...]
 
-Timing numbers go to stdout as one JSON line {name: sec} and to --out
-(default /tmp/profile_<tag>_<suffix>.json).
+Reads the data directory and core count from SPARK_GRAFT_SF_DIR and
+SPARK_GRAFT_CPUS, as bench.py does. With no queries it profiles
+bench.HEADLINE. One line per query goes to stdout; --out writes every
+record as JSON; --plans writes each query's formatted physical plan to
+DIR/<query>.txt.
 """
 
 from __future__ import annotations
@@ -18,24 +24,41 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 
+def _profile(build, action) -> dict:
+    """One query's record from its build and action QueryRecords."""
+    t = action.totals
+    return {
+        "wall_s": round(build.wall_s + action.wall_s, 3),
+        "build_s": round(build.wall_s, 3),
+        "build_jobs": len(build.jobs),
+        "action_s": round(action.wall_s, 3),
+        "action_jobs": len(action.jobs),
+        "stages": t["num_stages"],
+        "tasks": t["num_tasks"],
+        "exec_run_s": round(t["executor_run_time_ms"] / 1000, 3),
+        "shuffle_read_kb": round(t["shuffle_read_bytes"] / 1024),
+        "shuffle_write_kb": round(t["shuffle_write_bytes"] / 1024),
+        "spill_kb": round(
+            (t["memory_spilled_bytes"] + t["disk_spilled_bytes"]) / 1024
+        ),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
-    ap.add_argument("--plans-only", action="store_true")
-    ap.add_argument("--time-only", action="store_true")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--tag", default="r09")
-    ap.add_argument("--suffix", default="before")
-    ap.add_argument("--out", default=None)
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write each query's formatted plan here")
+    ap.add_argument("--out", metavar="FILE",
+                    help="write the JSON records here")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -45,15 +68,15 @@ def main() -> None:
     import bench
     import __spark_entry__ as entrymod
     from data_pipeline_framework_spark import get_spark
+    from data_pipeline_framework_spark.observability import SparkQueryMonitor
 
     spark = get_spark(
         app_name="profile",
         master=f"local[{cpus}]",
         extra_conf={
             "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
             "spark.sql.ui.retainedExecutions": "8",
-            "spark.ui.retainedJobs": "100",
-            "spark.ui.retainedStages": "100",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -63,47 +86,42 @@ def main() -> None:
     for n in names:
         if n not in qs:
             raise SystemExit(f"unknown query: {n}")
-
-    plans_dir = ROOT / "plans" / args.tag
-    plans_dir.mkdir(parents=True, exist_ok=True)
+    if args.plans:
+        Path(args.plans).mkdir(parents=True, exist_ok=True)
 
     # warm: JVM + parquet footers
     qs[names[0]](spark, sf_dir).count()
 
-    timings: dict[str, float] = {}
+    mon = SparkQueryMonitor(spark)
+    records: dict[str, dict] = {}
     for name in names:
-        if not args.time_only:
-            df = qs[name](spark, sf_dir)
+        best = None
+        for _ in range(args.runs):
+            with mon.measure(f"{name}_build") as build:
+                df = qs[name](spark, sf_dir)
+            with mon.measure(f"{name}_action") as action:
+                bench.run_action(name, df)
+            rec = _profile(build, action)
+            if best is None or rec["wall_s"] < best["wall_s"]:
+                best = rec
+            spark.catalog.clearCache()
+            spark.sparkContext._jvm.System.gc()
+        if args.plans:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            # strip auto-generated ids that churn between runs for
-            # stable diffs (keeps #NN expr ids — they're stable enough
-            # within one capture)
-            (plans_dir / f"{name}_{args.suffix}.txt").write_text(plan)
-        if args.plans_only:
-            continue
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            bench.run_action(name, df)
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-        spark.sparkContext.setJobDescription(None)
-        timings[name] = round(best, 3)
-        print(f"  {name}: {timings[name]}", file=sys.stderr, flush=True)
+            (Path(args.plans) / f"{name}.txt").write_text(plan)
+        if not records:
+            print(f"{'query':32}", *(f"{k:>7}" for k in best), flush=True)
+        records[name] = best
+        print(f"{name:32}", *(f"{v:>{max(len(k), 7)}}"
+                              for k, v in best.items()), flush=True)
 
-    if not args.plans_only:
-        out = args.out or f"/tmp/profile_{args.tag}_{args.suffix}.json"
-        payload = {
+    if args.out:
+        Path(args.out).write_text(json.dumps({
             "sf_dir": sf_dir, "cpus": cpus, "runs": args.runs,
-            "total": round(sum(timings.values()), 3), "queries": timings,
-        }
-        Path(out).write_text(json.dumps(payload, indent=1))
-        print(json.dumps({"total": payload["total"], "out": out}))
+            "queries": records,
+        }, indent=1))
 
 
 if __name__ == "__main__":
